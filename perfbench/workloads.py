@@ -489,9 +489,18 @@ class LongBand:
                 return [f"{len(prof)} long-series profile rows, expected 1"]
             mp = np.asarray(prof["mp"].iloc[0], dtype=np.float64)
             pi = np.asarray(prof["pi"].iloc[0], dtype=np.int32)
-            if np.array_equal(mp, self.ref_mp, equal_nan=True) and np.array_equal(pi, self.ref_pi):
-                return []
-            return ["chunked profile differs from serial mpx on the band"]
+            problems = []
+            bad_mp = np.nonzero(~((mp == self.ref_mp) | (np.isnan(mp) & np.isnan(self.ref_mp))))[0]
+            if len(bad_mp):
+                i = bad_mp[0]
+                problems.append(f"chunked mp differs from serial mpx at {len(bad_mp)} positions, "
+                                f"first {i}: {mp[i]!r} vs {self.ref_mp[i]!r}")
+            bad_pi = np.nonzero(pi != self.ref_pi)[0]
+            if len(bad_pi):
+                i = bad_pi[0]
+                problems.append(f"chunked pi differs from serial mpx at {len(bad_pi)} positions, "
+                                f"first {i}: {pi[i]} vs {self.ref_pi[i]} (mp {mp[i]!r} vs {self.ref_mp[i]!r})")
+            return problems
 
         return Outcome(self.plen, 0, 0, 0, verify)
 
