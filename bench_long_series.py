@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import urllib.request
 
@@ -61,6 +62,7 @@ def main() -> None:
     n_chunks = int(os.environ.get("LONG_N_CHUNKS", "32"))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     store = os.environ.get("LONG_STORE", "/tmp/tsmp_long_series_store")
+    shutil.rmtree(store, ignore_errors=True)  # each run adds a fresh subdirectory
     w = 256
 
     spark = get_spark(

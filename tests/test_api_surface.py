@@ -179,3 +179,14 @@ def test_query_registry_consistency():
     assert set(os_) == set(qs)
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in os_.values())
+
+
+def test_changed_selects_pipeline_e2e_for_its_operators():
+    """``verify_local --changed`` maps pipeline_e2e to every operator
+    module its parenthesized ``from .operators import (...)`` pulls in,
+    so edits to them re-gate it."""
+    import verify_local
+    from tsmp_spark.queries import QUERIES
+
+    mods = verify_local._query_modules(QUERIES["pipeline_e2e"])
+    assert {"operators.dedup", "operators.tokens", "operators.text"} <= mods

@@ -283,25 +283,103 @@ def test_dedup_groups_transitive(spark):
     assert by[50] == 50 and not g[g.doc_id == 50].is_dup.iloc[0]
 
 
-def test_connected_components_frees_round_checkpoints(spark):
-    """Every per-round localCheckpoint block is freed before return —
-    only the result's own checkpoint survives (Dataset.unpersist does
-    NOT free localCheckpoint RDDs; the operator frees them via the
-    block manager)."""
+def _persistent_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def _cc(spark):
     from tsmp_spark.operators import connected_components
 
-    def persistent_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
+    edges = spark.createDataFrame([(i, i + 1) for i in range(30)], "doc_a long, doc_b long")
+    return connected_components(edges), 31
 
-    before = persistent_ids()
+
+def _kcore(spark):
+    from tsmp_spark.operators import kcore_peel
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src long, dst long")
+    return kcore_peel(edges, k=2, rounds=4), 5
+
+
+def _lpa(spark):
+    from tsmp_spark.operators.graph import label_propagation
+
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
+        [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
+        "src string, dst string",
     )
-    out = connected_components(edges)
-    assert out.count() == 31
-    new = persistent_ids() - before
-    assert len(new) <= 1  # just the result's own checkpoint
+    return label_propagation(edges, rounds=2), 6
+
+
+def _mmr(spark):
+    from tsmp_spark.operators import mmr_topk
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.999, 0.04471, 0.0]), (2, [0.998, 0.0632, 0.0]),
+         (3, [0.5, 0.0, 0.866])],
+        "vec_id long, embedding array<float>",
+    )
+    return mmr_topk(emb, emb.filter(F.col("vec_id") == 0), k=2, pool=3), 2
+
+
+@pytest.mark.parametrize(
+    "build", [_cc, _kcore, _lpa, _mmr],
+    ids=["connected_components", "kcore_peel", "label_propagation", "mmr_topk"],
+)
+def test_iterative_operators_free_round_checkpoints(spark, build):
+    """Every per-round localCheckpoint block is freed before return —
+    only the result's own checkpoint survives (Dataset.unpersist does
+    NOT free localCheckpoint RDDs; cache.checkpoint_rounds frees them
+    via the block manager)."""
+    from tsmp_spark.operators.cache import release_caches
+
+    release_caches()
+    before = _persistent_ids(spark)
+    out, rows = build(spark)
+    assert out.count() == rows
+    release_caches()  # pins taken by sub-operators (cosine_topk)
+    assert len(_persistent_ids(spark) - before) <= 1  # the result's checkpoint
+
+
+@pytest.mark.parametrize("keep_result", [False, True])
+def test_checkpoint_rounds_frees_all_on_error(spark, keep_result):
+    """A round that raises frees every block the scope created, the
+    result's included, leaving the persistent set exactly as before."""
+    from tsmp_spark.operators.cache import checkpoint_rounds
+
+    before = _persistent_ids(spark)
+    with pytest.raises(RuntimeError, match="round failed"):
+        with checkpoint_rounds() as ckpt:
+            cur = ckpt(spark.range(10))
+            cur = ckpt(cur.select((F.col("id") * 2).alias("id")))
+            if keep_result:
+                ckpt.result(cur.filter(F.col("id") > 4))
+            assert len(_persistent_ids(spark) - before) >= 2
+            raise RuntimeError("round failed")
+    assert _persistent_ids(spark) == before
+
+
+def test_scratch_dirs_removed_by_release_caches(spark):
+    """The block store of mp_chunked_store and the replay dir of
+    sessions_stream are scratch dirs: nothing tsmp_-prefixed of theirs
+    is left in the temp dir once release_caches() runs."""
+    import os
+    import tempfile
+
+    from tsmp_spark.operators.cache import release_caches
+    from tsmp_spark.queries import QUERIES
+
+    def tsmp_dirs():
+        tmp = tempfile.gettempdir()
+        return {n for n in os.listdir(tmp) if n.startswith("tsmp_")}
+
+    before = tsmp_dirs()
+    assert QUERIES["mp_chunked_store"](spark, SF_SMOKE).count() > 0
+    QUERIES["sessions_stream"](spark, SF_SMOKE)
+    assert len(tsmp_dirs() - before) >= 2  # one scratch dir per builder
+    release_caches()
+    assert tsmp_dirs() - before == set()
 
 
 def test_decontaminate_ignores_blank_docs(spark):

@@ -199,16 +199,22 @@ def test_stomp_ab_matches_brute(series, series_b):
 
 
 def test_diag_chunk_merge_equals_serial(series):
-    minlag = EZ_N + 1
-    plen = len(series) - W + 1
-    chunks = diag_chunks(plen, minlag, 7)
-    assert chunks[0][0] == minlag and chunks[-1][1] == plen
-    parts = [mpx_partial(series, W, lo, hi, minlag=minlag) for lo, hi in chunks]
-    corr, pi = merge_partials(parts)
-    merged = partials_to_result(corr, pi, W)
-    serial = mpx(series, W, minlag=minlag)
-    np.testing.assert_allclose(merged.mp, serial.mp, atol=1e-12)
-    np.testing.assert_array_equal(merged.pi, serial.pi)
+    """Merged diagonal-chunk partials equal serial mpx bit for bit, in
+    either chunk order. The 2,048-step walk at w=8 is full of exact
+    correlation ties across chunks (and values a few ulp above 1), which
+    the merge must break toward the smaller index as the serial sweep
+    does."""
+    for a, w in ((series, W), (random_walk(2048, seed=0), 8)):
+        minlag = exclusion_zone_size(w, 0.5) + 1
+        plen = len(a) - w + 1
+        chunks = diag_chunks(plen, minlag, 7)
+        assert chunks[0][0] == minlag and chunks[-1][1] == plen
+        parts = [mpx_partial(a, w, lo, hi, minlag=minlag) for lo, hi in chunks]
+        serial = mpx(a, w, minlag=minlag)
+        for order in (parts, parts[::-1]):
+            merged = partials_to_result(*merge_partials(order), w)
+            np.testing.assert_array_equal(merged.mp, serial.mp)
+            np.testing.assert_array_equal(merged.pi, serial.pi)
 
 
 # ---------- incremental ----------

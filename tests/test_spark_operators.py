@@ -107,6 +107,26 @@ def test_chunked_series_store_path_exact_no_broadcast(spark, tmp_path):
         np.testing.assert_array_equal(a["pi"].to_numpy(), b["pi"].to_numpy())
 
 
+def test_series_store_reuse_keeps_each_call_exact(spark, tmp_path):
+    """Two calls sharing one ``series_store`` path over different doc
+    sets, executed second call first, each equal their own store-free
+    result: every call writes its blocks to a fresh subdirectory, so a
+    later call never overwrites blocks an earlier lazy result reads."""
+    store = str(tmp_path / "blocks")
+    docs = [generate_sequences(spark, n_docs=2, seed=s, length=1200) for s in (3, 4)]
+    lazy = [
+        matrix_profile(d, W, long_series_threshold=100, n_chunks=4, series_store=store)
+        for d in docs
+    ]
+    got = [p.toPandas() for p in reversed(lazy)][::-1]
+    for d, g in zip(docs, got):
+        ref = matrix_profile(d, W, long_series_threshold=100, n_chunks=4).toPandas()
+        ref, g = (x.sort_values(["doc_id", "pos"]).reset_index(drop=True) for x in (ref, g))
+        assert list(g.doc_id) == list(ref.doc_id)
+        np.testing.assert_array_equal(g["mp"].to_numpy(), ref["mp"].to_numpy())
+        np.testing.assert_array_equal(g["pi"].to_numpy(), ref["pi"].to_numpy())
+
+
 def test_tier1_fused_equals_relational_bit_exact(spark):
     """matrix_profile_tier1 (kernel-fused, map-only) == rollup_tier over
     the finite exploded profile, BIT-exact with NO rounding: the fused

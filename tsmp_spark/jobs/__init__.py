@@ -1,3 +1,3 @@
-from .checkpoint import CheckpointedJob, run_partitioned
+from .checkpoint import CheckpointedJob
 
-__all__ = ["CheckpointedJob", "run_partitioned"]
+__all__ = ["CheckpointedJob"]

@@ -96,16 +96,3 @@ class CheckpointedJob:
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(self.manifest_dir)
-
-
-def run_partitioned(
-    spark: SparkSession,
-    input_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    base_dir: str,
-    n_parts: int = 16,
-    key_col: str = "doc_id",
-    lineage: dict | None = None,
-) -> DataFrame:
-    job = CheckpointedJob(spark=spark, base_dir=base_dir, n_parts=n_parts, key_col=key_col)
-    return job.run(input_df, transform, lineage=lineage)

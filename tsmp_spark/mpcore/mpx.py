@@ -113,19 +113,20 @@ def mpx(
     2-D blocked variant with gathered index grids measured 4× slower, so
     the march stays).
     """
-    return _mpx_march(data, window_size, minlag, euclidean, diag_range)
+    w = int(window_size)
+    return _finish(*_mpx_march(data, w, minlag, diag_range), w, euclidean)
 
 
 def _mpx_march(
     data: np.ndarray,
-    window_size: int,
-    minlag: int | None = None,
-    euclidean: bool = True,
-    diag_range: tuple[int, int] | None = None,
-) -> MpxResult:
-    """Reference offset-march implementation (kept for cross-validation of
-    the blocked kernel; same semantics, scalar per-offset updates)."""
-    w = int(window_size)
+    w: int,
+    minlag: int | None,
+    diag_range: tuple[int, int] | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The offset march behind :func:`mpx` and :func:`mpx_partial`: raw
+    (unclamped) max-correlation and index per position. Ties keep the
+    smaller index: left neighbours arrive in ascending index order and
+    right neighbours by a first-max argmax, both under a strict ``>``."""
     if minlag is None:
         minlag = w // 2
     a, n, mu, sig, df, dg, profile_len = _precompute(data, w)
@@ -170,7 +171,7 @@ def _mpx_march(
                 np.copyto(mpc, corr, where=better)
                 pi[col0 : col0 + k][better] = offset
 
-    return _finish(mp_corr, pi, w, euclidean)
+    return mp_corr, pi
 
 
 def _finish(mp_corr: np.ndarray, pi: np.ndarray, w: int, euclidean: bool) -> MpxResult:
@@ -308,29 +309,25 @@ def mpx_partial(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Max-correlation partial profile over diagonals ``[diag_lo, diag_hi)``.
 
-    Returns ``(corr_partial, pi_partial)`` — merge partials with
-    :func:`merge_partials`, then convert via :func:`partials_to_result`.
+    Returns ``(corr_partial, pi_partial)`` with the correlation UNclamped
+    (values a few ulp above 1 must not tie in the merge) — merge partials
+    with :func:`merge_partials`, then clamp and convert via
+    :func:`partials_to_result`.
     """
-    w = int(window_size)
-    if minlag is None:
-        minlag = w // 2
-    res = mpx(data, w, minlag=minlag, euclidean=False, diag_range=(diag_lo, diag_hi))
-    # euclidean=False returns pearson corr clamped to 1; undo nothing — the
-    # merge operates on corr directly.
-    return res.mp, res.pi
+    return _mpx_march(data, int(window_size), minlag, (diag_lo, diag_hi))
 
 
 def merge_partials(
     parts: list[tuple[np.ndarray, np.ndarray]]
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic elementwise max-corr merge of diagonal-chunk partials.
-
-    Ties break toward the partial listed first, matching a sequential sweep
-    in ascending diagonal order.
+    """Elementwise max-corr merge of diagonal-chunk partials, bit-exact
+    against serial :func:`mpx`: equal correlations break toward the
+    smaller neighbour index, the serial sweep's rule, so the result does
+    not depend on the order of ``parts``.
     """
     corr, pi = parts[0][0].copy(), parts[0][1].copy()
     for c2, p2 in parts[1:]:
-        better = c2 > corr
+        better = (c2 > corr) | ((c2 == corr) & (p2 < pi))
         corr[better] = c2[better]
         pi[better] = p2[better]
     return corr, pi

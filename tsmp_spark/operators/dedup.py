@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .cache import pin
+from .cache import checkpoint_rounds, pin
 
 
 def _h64(col: Column, seed: int) -> Column:
@@ -225,9 +225,9 @@ def connected_components(
     near-dup clusters).
 
     Each round is two shuffles (a groupBy-min and a join per star op);
-    lineage is cut with ``localCheckpoint`` every round so the plan stays
-    O(1) deep — without it an iterative DataFrame loop compiles a plan
-    that grows per iteration and falls over around iteration ~20.
+    lineage is cut every round through :class:`cache.checkpoint_rounds`
+    — without it the plan grows per iteration and falls over around
+    iteration ~20.
 
     Returns (node, component) with component = the minimum node id
     reachable — deterministic, engine-portable (oracle: recursive-CTE
@@ -268,63 +268,36 @@ def connected_components(
         )
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    sc = edges.sparkSession.sparkContext
+    with checkpoint_rounds() as ckpt:
+        cur = ckpt(e)
+        for _ in range(max_iter):
+            nxt = ckpt(small_star(large_star(cur)))
+            # converged when the edge set is stable (star graphs are fixpoints)
+            changed = (
+                nxt.exceptAll(cur).limit(1).count()
+                + cur.exceptAll(nxt).limit(1).count()
+            )
+            cur = nxt
+            if changed == 0:
+                break
+        else:
+            import warnings
 
-    # track the EXACT RDD id each localCheckpoint creates (the analyzed
-    # plan of a checkpointed Dataset is a LogicalRDD holding the persisted
-    # RDD) — diffing the context-global persistent-id set instead would
-    # unpersist blocks a CONCURRENT caller persisted in the window, and
-    # since localCheckpoint truncates lineage that is unrecoverable
-    created: list[int] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint()
-        try:
-            created.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
-        except Exception:
-            created.append(-1)  # unknown id: leak this round rather than guess
-        return out
-
-    converged = False
-    cur = _ckpt(e)
-    for _ in range(max_iter):
-        nxt = _ckpt(small_star(large_star(cur)))
-        # converged when the edge set is stable (star graphs are fixpoints)
-        changed = (
-            nxt.exceptAll(cur).limit(1).count() + cur.exceptAll(nxt).limit(1).count()
+            warnings.warn(
+                f"connected_components: edge set not at fixpoint after "
+                f"{max_iter} rounds — components may be split; raise max_iter",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        # fixpoint edges are (node, root) stars; roots map to themselves
+        nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
+        comp = cur.groupBy("u").agg(F.min("v").alias("component"))
+        return ckpt.result(
+            nodes.join(comp, "u", "left").select(
+                F.col("u").alias("node"),
+                F.coalesce("component", "u").alias("component"),
+            )
         )
-        cur = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: edge set not at fixpoint after "
-            f"{max_iter} rounds — components may be split; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # fixpoint edges are (node, root) stars; roots map to themselves
-    nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
-    comp = cur.groupBy("u").agg(F.min("v").alias("component"))
-    out = nodes.join(comp, "u", "left").select(
-        F.col("u").alias("node"),
-        F.coalesce("component", "u").alias("component"),
-    )
-    result = _ckpt(out)
-    # free the per-round checkpoint blocks NOW (Dataset.unpersist does
-    # not touch localCheckpoint RDDs — they live in the block manager
-    # until GC + ContextCleaner). Only the ids THIS call created are
-    # touched (never a concurrent caller's), and ``result``'s own
-    # checkpoint — the last id tracked — survives.
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in created[:-1]:
-        jrdd = jmap.get(rid) if rid >= 0 else None
-        if jrdd is not None:  # None: already cleaned by ContextCleaner
-            jrdd.unpersist()
-    return result
 
 
 def dedup_groups(

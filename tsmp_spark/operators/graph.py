@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .cache import checkpoint_rounds
+
 PR_SCALE = 10**9
 PR_DAMP_NUM = 85
 PR_DAMP_DEN = 100
@@ -216,81 +218,63 @@ def kcore_peel(
 
     Scale: per round one degree groupBy over surviving edges plus two
     broadcast-able anti-joins against the (shrinking) weak set; edge
-    survivorship only ever shrinks. Per-round ``localCheckpoint`` cuts
-    the lineage exactly as connected_components does (a lazy 4-round
-    join chain sends Catalyst superlinear), and every checkpoint block
-    except the result's own is unpersisted before returning.
+    survivorship only ever shrinks. Lineage is cut every round through
+    :class:`cache.checkpoint_rounds` (a lazy 4-round join chain sends
+    Catalyst superlinear).
     """
-    sc = edges.sparkSession.sparkContext
-    created: list[int] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint()
-        try:
-            created.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
-        except Exception:
-            created.append(-1)  # unknown id: leak this round rather than guess
-        return out
-
-    a, b = F.col(src_col), F.col(dst_col)
-    canon = _ckpt(
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nodes = _ckpt(
-        canon.select(F.col("a").alias("node"))
-        .unionByName(canon.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    alive = nodes
-    e = canon
-    removed = None
-    for r in range(1, int(rounds) + 1):
-        deg = (
+    with checkpoint_rounds() as ckpt:
+        a, b = F.col(src_col), F.col(dst_col)
+        canon = ckpt(
+            edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        nodes = ckpt(
+            canon.select(F.col("a").alias("node"))
+            .unionByName(canon.select(F.col("b").alias("node")))
+            .distinct()
+        )
+        alive = nodes
+        e = canon
+        removed = None
+        for r in range(1, int(rounds) + 1):
+            deg = (
+                e.select(F.col("a").alias("node"))
+                .unionByName(e.select(F.col("b").alias("node")))
+                .groupBy("node")
+                .agg(F.count("*").cast("bigint").alias("c"))
+            )
+            weak = ckpt(
+                alive.join(deg, "node", "left")
+                .where(F.coalesce(F.col("c"), F.lit(0)) < k)
+                .select("node")
+            )
+            alive = ckpt(alive.join(weak, "node", "left_anti"))
+            e = ckpt(
+                e.join(weak.select(F.col("node").alias("a")), "a", "left_anti").join(
+                    weak.select(F.col("node").alias("b")), "b", "left_anti"
+                )
+            )
+            tagged = weak.select("node", F.lit(r).cast("int").alias("removed_round"))
+            removed = tagged if removed is None else removed.unionByName(tagged)
+        final_deg = (
             e.select(F.col("a").alias("node"))
             .unionByName(e.select(F.col("b").alias("node")))
             .groupBy("node")
-            .agg(F.count("*").cast("bigint").alias("c"))
+            .agg(F.count("*").cast("bigint").alias("fd"))
         )
-        weak = _ckpt(
-            alive.join(deg, "node", "left")
-            .where(F.coalesce(F.col("c"), F.lit(0)) < k)
-            .select("node")
-        )
-        alive = _ckpt(alive.join(weak, "node", "left_anti"))
-        e = _ckpt(
-            e.join(weak.select(F.col("node").alias("a")), "a", "left_anti").join(
-                weak.select(F.col("node").alias("b")), "b", "left_anti"
+        return ckpt.result(
+            nodes.join(removed, "node", "left")
+            .join(final_deg, "node", "left")
+            .select(
+                "node",
+                "removed_round",
+                F.when(
+                    F.col("removed_round").isNull(),
+                    F.coalesce(F.col("fd"), F.lit(0)).cast("bigint"),
+                ).alias("final_deg"),
             )
         )
-        tagged = weak.select("node", F.lit(r).cast("int").alias("removed_round"))
-        removed = tagged if removed is None else removed.unionByName(tagged)
-    final_deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("fd"))
-    )
-    result = _ckpt(
-        nodes.join(removed, "node", "left")
-        .join(final_deg, "node", "left")
-        .select(
-            "node",
-            "removed_round",
-            F.when(
-                F.col("removed_round").isNull(),
-                F.coalesce(F.col("fd"), F.lit(0)).cast("bigint"),
-            ).alias("final_deg"),
-        )
-    )
-    # free per-round checkpoint blocks; the result's own (last id) survives
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in created[:-1]:
-        jrdd = jmap.get(rid) if rid >= 0 else None
-        if jrdd is not None:
-            jrdd.unpersist()
-    return result
 
 
 def label_propagation(
@@ -316,66 +300,50 @@ def label_propagation(
     Scale: per round ONE edge-keyed join (labels onto neighbor
     endpoints) + ONE (node, label) combinable groupBy + ONE node-keyed
     WindowGroupLimit top-1 — all hash-bounded by |E| and |V|; round
-    state is the (node, label) table. Per-round ``localCheckpoint``
-    keeps the Catalyst plan linear in rounds (the kcore/connected-
-    components convention), and all per-round blocks except the
-    result's are unpersisted before returning.
+    state is the (node, label) table. Lineage is cut every round
+    through :class:`cache.checkpoint_rounds`.
 
     Output: (node, label, community_size) after the final round.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    sc = edges.sparkSession.sparkContext
-    created: list[int] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint()
-        try:
-            created.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
-        except Exception:
-            created.append(-1)
-        return out
-
-    a, b = F.col(src_col), F.col(dst_col)
-    adj = _ckpt(
-        edges.select(a.alias("node"), b.alias("nbr"))
-        .unionByName(edges.select(b.alias("node"), a.alias("nbr")))
-        .filter(F.col("node") != F.col("nbr"))
-        .distinct()
-    )
-    labels = adj.select("node").distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    w = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("label").asc()
-    )
-    for _ in range(int(rounds)):
-        nl = adj.join(
-            labels.select(
-                F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
-            ),
-            "nbr",
+    with checkpoint_rounds() as ckpt:
+        a, b = F.col(src_col), F.col(dst_col)
+        adj = ckpt(
+            edges.select(a.alias("node"), b.alias("nbr"))
+            .unionByName(edges.select(b.alias("node"), a.alias("nbr")))
+            .filter(F.col("node") != F.col("nbr"))
+            .distinct()
         )
-        cnt = nl.groupBy("node", F.col("nbr_label").alias("label")).agg(
-            F.count("*").cast("bigint").alias("c")
+        labels = adj.select("node").distinct().select(
+            "node", F.col("node").alias("label")
         )
-        labels = _ckpt(
-            cnt.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "label")
+        w = Window.partitionBy("node").orderBy(
+            F.col("c").desc(), F.col("label").asc()
         )
-    sizes = labels.groupBy("label").agg(
-        F.count("*").cast("bigint").alias("community_size")
-    )
-    result = _ckpt(labels.join(F.broadcast(sizes), "label").select(
-        "node", "label", "community_size"
-    ))
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in created[:-1]:
-        jrdd = jmap.get(rid) if rid >= 0 else None
-        if jrdd is not None:
-            jrdd.unpersist()
-    return result
+        for _ in range(int(rounds)):
+            nl = adj.join(
+                labels.select(
+                    F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
+                ),
+                "nbr",
+            )
+            cnt = nl.groupBy("node", F.col("nbr_label").alias("label")).agg(
+                F.count("*").cast("bigint").alias("c")
+            )
+            labels = ckpt(
+                cnt.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select("node", "label")
+            )
+        sizes = labels.groupBy("label").agg(
+            F.count("*").cast("bigint").alias("community_size")
+        )
+        return ckpt.result(
+            labels.join(F.broadcast(sizes), "label").select(
+                "node", "label", "community_size"
+            )
+        )
 
 
 def degree_assortativity(

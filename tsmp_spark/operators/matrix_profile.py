@@ -21,6 +21,7 @@ per-row Python (input_hint requirement).
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -187,7 +188,8 @@ def matrix_profile_nested(
       entirely, halving the input scan when series are known-short.
     - ``series_store``: shared-storage path for the long-series block
       store (see :func:`_matrix_profile_chunked_nested`); replaces the
-      broadcast join-back at 10⁸+-token scale.
+      broadcast join-back at 10⁸+-token scale. Each call writes a fresh
+      subdirectory of it; the caller owns the path.
     """
     w = int(window_size)
     ez_n = exclusion_zone_size(w, exclusion_zone)
@@ -385,9 +387,8 @@ def _matrix_profile_chunked_nested(
       ``(doc_id, seg)``: no task ever holds more than
       n_chunks × merge_segment × 12 B (25 MB at defaults), instead of
       n_chunks × profile_len — and segment merges of one series run in
-      parallel. Partials sort by ``chunk_id`` before merging, so ties
-      break in ascending-diagonal order EXACTLY like the serial sweep
-      (the old single-group merge folded in shuffle-arrival order).
+      parallel. Partials merge in any order and still match serial
+      ``mpx`` bit for bit (see ``mpcore.merge_partials``).
     - Per-segment results reassemble to the nested row with pure JVM
       ``collect_list → array_sort → flatten`` (one row per series — the
       nested OUTPUT row is the only remaining full-length object; at
@@ -408,9 +409,11 @@ def _matrix_profile_chunked_nested(
     if series_store is None:
         fan = fan.join(F.broadcast(sequences.select("doc_id", "tokens")), "doc_id")
     else:
-        # ONE eager pass writes the blocked store; chunk tasks read from
-        # it directly. JVM-side slicing (no Python touches the tokens on
-        # the write path); int32 blocks round-trip the tokens exactly.
+        # ONE eager pass writes the blocked store to a fresh subdirectory
+        # the chunk kernel captures, so a later call on the same path never
+        # overwrites blocks this result still reads. JVM-side slicing (no
+        # Python touches the tokens); int32 blocks round-trip them exactly.
+        series_store = f"{series_store.rstrip('/')}/{uuid.uuid4().hex}"
         bt = int(block_tokens)
         sequences.select(
             "doc_id",
@@ -421,7 +424,7 @@ def _matrix_profile_chunked_nested(
                     f" b -> slice(tokens, b * {bt} + 1, {bt}))"
                 )
             ).alias("block_id", "block"),
-        ).write.mode("overwrite").parquet(series_store)
+        ).write.parquet(series_store)
 
     def _emit_rows(rows, doc_id, a, chunk_id):
         from ..mpcore import mpx_partial
@@ -500,13 +503,9 @@ def _matrix_profile_chunked_nested(
     )
 
     def seg_merge_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf["chunk_id"].to_numpy().argsort(kind="stable")
         parts = [
-            (
-                np.asarray(pdf["corr"].iloc[i], dtype=np.float64),
-                np.asarray(pdf["pi"].iloc[i], dtype=np.int64),
-            )
-            for i in order
+            (np.asarray(c, dtype=np.float64), np.asarray(p, dtype=np.int64))
+            for c, p in zip(pdf["corr"], pdf["pi"])
         ]
         corr, pi = merge_partials(parts)
         r = partials_to_result(corr, pi, w)

@@ -18,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .cache import pin
+from .cache import checkpoint_rounds, pin
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1366,96 +1366,80 @@ def mmr_topk(
 
     Scale: the candidate pool is ``pool`` rows per query (cosine_topk's
     broadcast contract), the pairwise-sim table ≤ pool² per query, and
-    the k−1 greedy rounds run over those bounded frames — localCheckpoint
-    per round keeps the recursive plan flat exactly as kcore_peel does.
+    the k−1 greedy rounds run over those bounded frames, with lineage cut
+    every round through :class:`cache.checkpoint_rounds`.
 
     Output: (query_id, sel_round ∈ [1, k], neighbor_id, score) with the
     raw unrounded score (callers round for display).
     """
-    sc = embeddings.sparkSession.sparkContext
-    created: list[int] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint()
-        try:
-            created.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
-        except Exception:
-            created.append(-1)
-        return out
-
-    cand = _ckpt(cosine_topk(embeddings, queries, k=pool, id_col=id_col, vec_col=vec_col))
-    ce = embeddings.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", _norm(F.col("cv")))
-    ca = cand.select("query_id", F.col("neighbor_id").alias("a"))
-    cb = cand.select("query_id", F.col("neighbor_id").alias("b"))
-    pairs = _ckpt(
-        ca.join(cb, "query_id")
-        .filter(F.col("a") != F.col("b"))
-        .join(ce.select(F.col("cid").alias("a"), F.col("cv").alias("va"), F.col("cn").alias("na")), "a")
-        .join(ce.select(F.col("cid").alias("b"), F.col("cv").alias("vb"), F.col("cn").alias("nb")), "b")
-        .select(
-            "query_id",
-            "a",
-            "b",
-            _cosine_carried(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias("sim"),
-        )
-    )
-    first = cand.filter(F.col("rank") == 1).select(
-        "query_id",
-        F.lit(1).cast("int").alias("sel_round"),
-        "neighbor_id",
-        F.col("cosine").alias("score"),
-    )
-    sel = _ckpt(first)
-    remaining = _ckpt(cand.filter(F.col("rank") > 1).select("query_id", "neighbor_id", "cosine"))
-    half = F.lit(0.5)
-    for t in range(2, int(k) + 1):
-        ms = (
-            remaining.join(
-                pairs.select("query_id", F.col("a").alias("neighbor_id"), F.col("b").alias("sid"), "sim"),
-                ["query_id", "neighbor_id"],
-            )
-            .join(
-                sel.select("query_id", F.col("neighbor_id").alias("sid")),
-                ["query_id", "sid"],
-            )
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.max("sim").alias("maxsim"), F.max("cosine").alias("cosine"))
-        )
-        scored = ms.select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            (half * F.col("cosine") - half * F.col("maxsim")).alias("score"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("neighbor_id").asc()
-        )
-        pick = _ckpt(
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+    with checkpoint_rounds() as ckpt:
+        cand = ckpt(cosine_topk(embeddings, queries, k=pool, id_col=id_col, vec_col=vec_col))
+        ce = embeddings.select(
+            F.col(id_col).alias("cid"),
+            F.col(vec_col).cast("array<double>").alias("cv"),
+        ).withColumn("cn", _norm(F.col("cv")))
+        ca = cand.select("query_id", F.col("neighbor_id").alias("a"))
+        cb = cand.select("query_id", F.col("neighbor_id").alias("b"))
+        pairs = ckpt(
+            ca.join(cb, "query_id")
+            .filter(F.col("a") != F.col("b"))
+            .join(ce.select(F.col("cid").alias("a"), F.col("cv").alias("va"), F.col("cn").alias("na")), "a")
+            .join(ce.select(F.col("cid").alias("b"), F.col("cv").alias("vb"), F.col("cn").alias("nb")), "b")
             .select(
                 "query_id",
-                F.lit(t).cast("int").alias("sel_round"),
+                "a",
+                "b",
+                _cosine_carried(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias("sim"),
+            )
+        )
+        first = cand.filter(F.col("rank") == 1).select(
+            "query_id",
+            F.lit(1).cast("int").alias("sel_round"),
+            "neighbor_id",
+            F.col("cosine").alias("score"),
+        )
+        sel = ckpt(first)
+        remaining = ckpt(cand.filter(F.col("rank") > 1).select("query_id", "neighbor_id", "cosine"))
+        half = F.lit(0.5)
+        for t in range(2, int(k) + 1):
+            ms = (
+                remaining.join(
+                    pairs.select("query_id", F.col("a").alias("neighbor_id"), F.col("b").alias("sid"), "sim"),
+                    ["query_id", "neighbor_id"],
+                )
+                .join(
+                    sel.select("query_id", F.col("neighbor_id").alias("sid")),
+                    ["query_id", "sid"],
+                )
+                .groupBy("query_id", "neighbor_id")
+                .agg(F.max("sim").alias("maxsim"), F.max("cosine").alias("cosine"))
+            )
+            scored = ms.select(
+                "query_id",
                 "neighbor_id",
-                "score",
+                "cosine",
+                (half * F.col("cosine") - half * F.col("maxsim")).alias("score"),
             )
-        )
-        sel = _ckpt(sel.unionByName(pick))
-        remaining = _ckpt(
-            remaining.join(
-                pick.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_anti"
+            w = Window.partitionBy("query_id").orderBy(
+                F.col("score").desc(), F.col("neighbor_id").asc()
             )
-        )
-    result = _ckpt(sel)
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in created[:-1]:
-        jrdd = jmap.get(rid) if rid >= 0 else None
-        if jrdd is not None:
-            jrdd.unpersist()
-    return result
+            pick = ckpt(
+                scored.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(
+                    "query_id",
+                    F.lit(t).cast("int").alias("sel_round"),
+                    "neighbor_id",
+                    "score",
+                )
+            )
+            sel = ckpt(sel.unionByName(pick))
+            remaining = ckpt(
+                remaining.join(
+                    pick.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_anti"
+                )
+            )
+        return ckpt.result(sel)
 
 
 #: RBO@10 prefix-weight table, p = 9/10, as EXACT integers over the

@@ -1055,16 +1055,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_simhash_half(col: str, seed: int) -> str:
-    return f"""
-  SELECT w.doc_id, b.bit,
-         sum(CASE WHEN (CAST(('0x' || substr(md5('s{seed}:' || w.word), 1, 8)) AS BIGINT) >> b.bit) & 1 = 1
-                  THEN 1 ELSE -1 END) AS s
-  FROM words w CROSS JOIN bits b
-  GROUP BY 1, 2
-"""
-
-
 SQL_SIMHASH = r"""
 WITH norm AS (
   SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
@@ -3722,12 +3712,12 @@ def q_mp_chunked_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, block_id, block) parquet rows, chunk tasks read via pyarrow
     doc-filtered scans; zero token broadcast in the plan, pinned in
     tests/test_spark_operators.py). Same brute-force SQL oracle: the
-    store path is bit-exact vs the broadcast path by construction."""
-    import tempfile
-
+    store path is bit-exact vs the broadcast path by construction. The
+    store lives in a scratch dir that ``release_caches()`` removes."""
     from .operators import matrix_profile
+    from .operators.cache import scratch_dir
 
-    store = tempfile.mkdtemp(prefix="tsmp_mp_store_") + "/blocks"
+    store = scratch_dir("mp_store_")
     prof = _finite_profile(
         matrix_profile(
             _sequences(spark, sf_dir), W, long_series_threshold=16,
@@ -14319,9 +14309,9 @@ def q_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained sink is exactly the batch split, sentinel-free by
     construction, and ``session_idx`` is recovered as the per-user
     start-order rank."""
-    import tempfile
     import uuid
 
+    from .operators.cache import scratch_dir
     from .streaming.sessions import sessionize_stream
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -14337,7 +14327,7 @@ def q_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("ts", F.timestamp_seconds(F.lit(sentinel_sec)))
     )
-    base = tempfile.mkdtemp(prefix="sess_replay_")
+    base = scratch_dir("sess_replay_")
     ev.coalesce(1).write.mode("overwrite").parquet(f"{base}/d0")
     sentinels.coalesce(1).write.mode("overwrite").parquet(f"{base}/d1")
 

@@ -144,24 +144,30 @@ def run(sf_dir: str | None = None, only: set[str] | None = None,
 
 def _query_modules(fn) -> set[str]:
     """Modules under tsmp_spark.{operators,streaming,codecs} a registry
-    callable imports — by source scan, resolving package-level re-exports
-    through the attribute's ``__module__``."""
+    callable imports — from the relative ``from .x import ...`` nodes of
+    its source, resolving package-level re-exports through the
+    attribute's ``__module__``."""
+    import ast
     import importlib
     import inspect
-    import re
+    import textwrap
 
     try:
-        src = inspect.getsource(fn)
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
     except (OSError, TypeError):
         return set()
     found: set[str] = set()
-    for m in re.finditer(r"from \.(operators|streaming|codecs)\.(\w+) import", src):
-        found.add(f"{m.group(1)}.{m.group(2)}")
-    for m in re.finditer(r"from \.(operators|streaming|codecs) import ([^\n(]+)", src):
-        pkg = importlib.import_module(f"tsmp_spark.{m.group(1)}")
-        for nm in m.group(2).split(","):
-            obj = getattr(pkg, nm.strip(), None)
-            mod = getattr(obj, "__module__", "")
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.ImportFrom) and node.level and node.module):
+            continue
+        if node.module.split(".")[0] not in ("operators", "streaming", "codecs"):
+            continue
+        if "." in node.module:
+            found.add(node.module)
+            continue
+        pkg = importlib.import_module(f"tsmp_spark.{node.module}")
+        for alias in node.names:
+            mod = getattr(getattr(pkg, alias.name, None), "__module__", "")
             if mod.startswith("tsmp_spark."):
                 found.add(mod.removeprefix("tsmp_spark."))
     return found
